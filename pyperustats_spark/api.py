@@ -101,17 +101,16 @@ class SeriesClient:
                 F.col("date") <= F.lit(end_date).cast("timestamp"))
         return src
 
-    def fetch(self, codes: list[str], freq: str = "M",
-              start_date: str | None = None,
-              end_date: str | None = None, sort: bool = True) -> DataFrame:
-        """Wide one-column-per-code frame at *freq*, served from the
-        (freq, window) cache namespace; only codes missing from that
-        namespace touch the source (reference fetch_data flow,
-        fetcher.py:47-107: ``cached_codes(freq, start, end)`` →
-        fetch-only-new → save → load). ``sort=False`` when composing —
-        the presentation date sort would be thrown away by any
-        downstream join/shuffle (fetch_multi passes it)."""
-        known, _unknown = self.validate_codes(codes)
+    def _cached_long(self, known: list[str], freq: str,
+                     start_date: str | None,
+                     end_date: str | None) -> DataFrame | None:
+        """The per-frequency cache plan for already-validated *known*
+        codes: append the ones missing from the (freq, window) namespace,
+        resampled from the source, then return the namespace's long
+        (date, code, value) view filtered to *known*. None when *known*
+        is empty — such a group neither reads nor writes its namespace."""
+        if not known:
+            return None
         cache = self.cache_for(freq, start_date, end_date)
         missing = cache.missing_codes(known)
         if missing:
@@ -123,8 +122,27 @@ class SeriesClient:
                         F.col("value_sum").alias("value"))
             )
             cache.append(fresh)
-        cached = cache.load()
-        long_df = cached.where(F.col("code").isin(known))
+        return cache.load().where(F.col("code").isin(known))
+
+    def _empty_wide(self) -> DataFrame:
+        # the date-only frame a pivot over zero codes yields
+        return self.spark.createDataFrame([], "date timestamp")
+
+    def fetch(self, codes: list[str], freq: str = "M",
+              start_date: str | None = None,
+              end_date: str | None = None, sort: bool = True) -> DataFrame:
+        """Wide one-column-per-code frame at *freq*, served from the
+        (freq, window) cache namespace; only codes missing from that
+        namespace touch the source (reference fetch_data flow,
+        fetcher.py:47-107: ``cached_codes(freq, start, end)`` →
+        fetch-only-new → save → load). Unknown codes are dropped; with
+        none known the result is an empty date-only frame. ``sort=False``
+        when composing — the presentation date sort would be thrown
+        away by any downstream join/shuffle."""
+        known, _unknown = self.validate_codes(codes)
+        long_df = self._cached_long(known, freq, start_date, end_date)
+        if long_df is None:
+            return self._empty_wide()
         return _ts.pivot_wide(long_df, codes=tuple(known), sort=sort)
 
     def fetch_multi(self, codes: list[str],
@@ -136,28 +154,39 @@ class SeriesClient:
         (models.py:152-170, fetcher.py:47-107): the codes are grouped
         by frequency suffix, each group runs the full per-frequency
         cache plan in its own (freq, window) namespace, and the
-        per-frequency wide frames come back aligned on ``date`` with
-        FULL OUTER semantics (a month-end row carries the monthly
-        values with NULL daily columns — the reference's outer-merge of
-        new columns, cache.py:140-169). Column order follows the
-        request's frequency buckets.
+        per-frequency frames come back aligned on ``date`` with FULL
+        OUTER semantics (a month-end row carries the monthly values
+        with NULL daily columns — the reference's outer-merge of new
+        columns, cache.py:140-169). Columns: ``date``, then frequencies
+        in sorted order, known codes sorted within each; unknown codes
+        are dropped.
 
-        Scale: one cache plan per distinct frequency (≤4), each a
-        bounded-catalogue fetch; the alignment is a chain of full-outer
-        joins on the compact (date) key."""
+        Scale: the catalogue is checked ONCE for every grouped code (one
+        distinct over the source, not one per frequency). The groups'
+        long (date, code, value) views are unioned and pivoted ONCE:
+        codes never repeat across groups, so the pivot's per-code sum
+        equals each group's own pivot, and its date groups are the
+        union of every group's dates — the full-outer alignment with no
+        join chain (one window exchange per group plus the pivot's
+        two)."""
         groups = plan_by_frequency(codes)
         if not groups:
             raise ValueError(
                 f"no code carries a frequency suffix {FREQ_SUFFIXES}; "
                 "pass e.g. 'PN01288PM' (M = monthly)")
-        wides = [
-            self.fetch(groups[f], freq=f, start_date=start_date,
-                       end_date=end_date, sort=False)
-            for f in sorted(groups)
-        ]
-        aligned = reduce(
-            lambda a, b: a.join(b, on="date", how="full_outer"), wides)
-        return aligned.orderBy("date")
+        known, _unknown = self.validate_codes(
+            [c for cs in groups.values() for c in cs])
+        longs, columns = [], []
+        for f in sorted(groups):
+            group_known = [c for c in known if c in groups[f]]
+            long_df = self._cached_long(group_known, f, start_date, end_date)
+            if long_df is not None:
+                longs.append(long_df)
+                columns.extend(group_known)
+        if not longs:
+            return self._empty_wide()
+        return _ts.pivot_wide(reduce(DataFrame.unionByName, longs),
+                              codes=tuple(columns))
 
 
 class DocumentPipeline:

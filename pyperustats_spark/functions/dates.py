@@ -79,12 +79,3 @@ def quarter_label(ts: Column) -> Column:
     """``yq`` label like ``2023Q1`` (reference keeps a ``yq`` column for
     quarterly frames, perustats/BCRP/utils.py:183)."""
     return F.concat(F.year(ts).cast("string"), F.lit("Q"), F.quarter(ts).cast("string"))
-
-
-def truncate_to_frequency(ts: Column, frequency: str) -> Column:
-    """Truncate a timestamp to the start of its D/M/Q/A period."""
-    frequency = frequency.upper()
-    unit = {"D": "DAY", "M": "MONTH", "Q": "QUARTER", "A": "YEAR"}.get(frequency)
-    if unit is None:
-        raise ValueError(f"Unknown frequency: {frequency!r}")
-    return F.date_trunc(unit, ts)

@@ -29,11 +29,6 @@ def md5_hash64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def md5_hash31(col: Column) -> Column:
-    """md5-derived hash reduced into [0, 2^31-1)."""
-    return md5_hash64(col) % F.lit(P31)
-
-
 def xx_hash31(col: Column) -> Column:
     """xxHash64 reduced into [0, 2^31-1) — native JVM hash, ~10× cheaper
     than the md5→hex→conv path. Use for rows-only operators (MinHash,
@@ -85,19 +80,6 @@ def minhash_signature_from_hashes(hashes: Column, k: int = 32, seed: int = 7) ->
                 F.transform(hs, lambda h: (h * c["a"] + c["b"]) % F.lit(P31))
             ).cast("int"),
         ),
-    )
-
-
-def minhash_signature(shingles: Column, k: int = 32, seed: int = 7) -> Column:
-    """Array of k min-hash values for an array-of-string shingle column.
-
-    Per-row and zero-shuffle: hash each shingle once via md5→int31, then
-    for each permutation take ``array_min(transform(...))`` of
-    ``(a*h + b) mod P31`` — all inside codegen. ``a*h + b`` < 2^62 so
-    ANSI-mode int64 arithmetic never overflows.
-    """
-    return minhash_signature_from_hashes(
-        F.transform(shingles, lambda s: md5_hash31(s)), k=k, seed=seed
     )
 
 

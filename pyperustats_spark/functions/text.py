@@ -84,11 +84,6 @@ def clean_text_es(col: Column) -> Column:
     return F.trim(F.regexp_replace(s, r"\s+", " "))
 
 
-def collapse_ws(col: Column) -> Column:
-    """Collapse runs of whitespace to one space and trim."""
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
 def clean_numeric(col: Column) -> Column:
     """``'3,400,841.50'`` → 3400841.50, ``'-5.2%'`` → -5.2;
     non-numeric → NULL.
@@ -178,9 +173,3 @@ def punct_ratio(col: Column) -> Column:
 def digit_ratio(col: Column) -> Column:
     no_digit = F.regexp_replace(col, r"[0-9]", "")
     return (F.length(col) - F.length(no_digit)) / F.greatest(F.length(col), F.lit(1))
-
-
-def stopword_hits(col: Column, lang: str) -> Column:
-    """Count of tokens that are stopwords of *lang*."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(tokens(col), lambda t: F.array_contains(sw, t)))

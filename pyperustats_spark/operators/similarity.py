@@ -302,10 +302,6 @@ def _hyperplanes_seeded(dim: int, num_planes: int, seed: int) -> list[list[float
     return planes
 
 
-def _hyperplanes(dim: int, num_planes: int) -> list[list[float]]:
-    return _hyperplanes_seeded(dim, num_planes, 123456789)
-
-
 def lsh_bucket(vec_col, planes: list[list[float]]):
     """Bucket id = sign-bit string across hyperplanes, JVM-side. The
     planes ship as ONE 2-D literal scored by a runtime transform (one

@@ -20,19 +20,66 @@ non-starter:
 - :meth:`cached_codes` / :meth:`missing_codes` reproduce the
   reference's fetch-planning queries (``cached_codes``,
   cache.py:105-121).
+
+Two sidecar files sit beside the data, underscore-prefixed so parquet
+readers skip them like ``_SUCCESS`` markers:
+
+- ``_MANIFEST`` holds the last claimed batch id as a bare integer.
+- ``_SCHEMA`` holds the Spark schema every data file shares, as JSON,
+  every field nullable as a parquet read reports it. It is written
+  atomically after an append's data has landed, when the namespace
+  was empty or the increment's schema matches the files already there
+  (the sidecar's, or without one the footers' merged schema), and
+  inside a compaction's new generation before the swap. An append
+  whose schema differs removes it before writing. Reads pass it to
+  ``spark.read.schema(...)``, which skips the footer job schema
+  inference launches on every read. A namespace without it (written
+  before the sidecar existed, or holding mixed schemas until its next
+  compaction) falls back to inference.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 BATCH_COL = "_batch_id"
 # underscore prefix: parquet readers skip it like _SUCCESS markers
 MANIFEST_FILE = "_MANIFEST"
+SCHEMA_FILE = "_SCHEMA"
+
+
+def _as_nullable(t: DataType) -> DataType:
+    """*t* as a parquet read reports it: Spark marks every field of a
+    file source nullable, nested ones included."""
+    if isinstance(t, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType),
+                       True)
+    return t
+
+
+def _write_atomic(path: str, text: str) -> None:
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def window_namespace(freq: str, start_date: str | None = None,
@@ -86,10 +133,28 @@ class IncrementalParquetCache:
         return (row["m"] if row["m"] is not None else -1) + 1
 
     def _write_manifest(self, batch_id: int) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, self._manifest_path())
+        _write_atomic(self._manifest_path(), str(batch_id))
+
+    def _schema_path(self) -> str:
+        return os.path.join(self.path, SCHEMA_FILE)
+
+    def _read_schema(self) -> StructType | None:
+        try:
+            with open(self._schema_path()) as f:
+                return StructType.fromJson(json.load(f))
+        except (OSError, ValueError):
+            return None  # no sidecar: reads infer the schema
+
+    def _has_data(self) -> bool:
+        """True when a parquet data file exists under the namespace,
+        skipping the hidden ``_``/``.`` paths Spark's reader skips (a
+        failed write's ``_temporary`` directory among them)."""
+        for _root, dirs, files in os.walk(self.path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            if any(f.endswith(".parquet") and not f.startswith(("_", "."))
+                   for f in files):
+                return True
+        return False
 
     def append(self, df: DataFrame) -> int:
         """Write an increment; rows with keys already cached supersede
@@ -103,11 +168,24 @@ class IncrementalParquetCache:
         ambiguous under latest-wins."""
         batch_id = self._next_batch_id()
         self._write_manifest(batch_id)
-        (
-            df.withColumn(BATCH_COL, F.lit(batch_id))
-            .write.mode("append")
-            .parquet(self.path)
-        )
+        out = df.withColumn(BATCH_COL, F.lit(batch_id))
+        schema = _as_nullable(out.schema)
+        if not self._has_data():
+            shared = True
+        else:
+            # the sidecar is valid only while every data file shares it:
+            # drop it BEFORE a differing increment lands. Without one,
+            # merge every file's footer (one job) to learn whether they
+            # all match this increment.
+            known = self._read_schema() or (
+                self.spark.read.option("mergeSchema", "true")
+                .parquet(self.path).schema)
+            shared = known == schema
+            if not shared and os.path.exists(self._schema_path()):
+                os.remove(self._schema_path())
+        out.write.mode("append").parquet(self.path)
+        if shared:
+            _write_atomic(self._schema_path(), schema.json())
         # drop Spark's cached file listing for this path so plans built
         # after the append see the new batch (stale FileStatusCache
         # entries otherwise hide increments within a session)
@@ -117,10 +195,17 @@ class IncrementalParquetCache:
     # -- read path ----------------------------------------------------------
 
     def _read_raw(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
-            return None  # empty cache: no files yet
+        """All batches as written, or None when no data file exists yet.
+        Any other failure (a corrupt or unreadable file) raises: reading
+        a damaged namespace as empty would re-append every code on top
+        of it."""
+        if not self._has_data():
+            return None
+        schema = self._read_schema()
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self.path)
 
     def load(self) -> DataFrame | None:
         """Latest-wins view: one shuffle on the key columns."""
@@ -180,11 +265,11 @@ class IncrementalParquetCache:
         if resolved is None:
             return
         tmp = self.path.rstrip("/") + ".compacting"
-        (
-            resolved.withColumn(BATCH_COL, F.lit(0))
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
+        out = resolved.withColumn(BATCH_COL, F.lit(0))
+        out.write.mode("overwrite").parquet(tmp)
+        # inside the new generation, so it swaps in with the data
+        _write_atomic(os.path.join(tmp, SCHEMA_FILE),
+                      _as_nullable(out.schema).json())
         old = self.path.rstrip("/") + ".old"
         shutil.move(self.path, old)
         shutil.move(tmp, self.path)

@@ -47,6 +47,7 @@ def test_series_client_multi_frequency_fetch(spark, tables, tmp_path):
         F.when(F.col("code") == "AF", "AFD")
         .when(F.col("code") == "NO", "NOM")
         .when(F.col("code") == "RF", "RFQ")
+        .when(F.col("code") == "AO", "AOA")
         .otherwise(F.concat(F.col("code"), F.lit("M"))))
     client = SeriesClient(spark, long_df, str(tmp_path / "multi_cache"))
 
@@ -90,6 +91,24 @@ def test_series_client_multi_frequency_fetch(spark, tables, tmp_path):
     client.fetch_multi(["AFD", "NOM", "RFQ"])
     assert befores == {f: client.cache_for(f)._next_batch_id() for f in "DMQ"}
 
+    # all four frequencies: the catalogue is checked once per call, and
+    # the groups' long views are pivoted once — no full-outer join chain
+    import pyperustats_spark.plans as P
+    validations = []
+    validate = client.validate_codes
+    client.validate_codes = lambda cs: validations.append(cs) or validate(cs)
+    wide4 = client.fetch_multi(["NOM", "AOA", "RFQ", "AFD", "BOGUSM"])
+    assert len(validations) == 1
+    del client.validate_codes
+    # date, then frequencies sorted, known codes sorted within each
+    assert wide4.columns == ["date", "AOA", "AFD", "NOM", "RFQ"]
+    assert P.count_exchanges(wide4) <= 6
+    assert "Join" not in P.explain_str(wide4, "simple")
+    for freq, code in (("A", "AOA"), ("D", "AFD"), ("M", "NOM"),
+                       ("Q", "RFQ")):
+        assert rows(wide4, code) == rows(client.fetch([code], freq), code)
+    assert wide4.count() == wide4.select("date").distinct().count()
+
     # an explicit window lands in its own namespace, filtered to range
     w = client.fetch_multi(["AFD", "NOM"], start_date="1995-01-01",
                            end_date="1995-12-31")
@@ -97,6 +116,26 @@ def test_series_client_multi_frequency_fetch(spark, tables, tmp_path):
         "M", "1995-01-01", "1995-12-31").cached_codes() == ["NOM"]
     got = [r["date"] for r in w.select("date").collect()]
     assert all(d.year == 1995 for d in got)
+
+
+def test_series_client_unknown_codes_leave_cache_untouched(
+        spark, tables, tmp_path):
+    """A frequency group with no known code neither reads nor writes its
+    namespace, even on a fresh cache."""
+    long_df = TS.series_long(tables["lineitem"]).withColumn(
+        "code", F.concat(F.col("code"), F.lit("D")))
+    client = SeriesClient(spark, long_df, str(tmp_path / "fresh_cache"))
+
+    only_unknown = client.fetch(["BOGUSM"], "M")
+    assert only_unknown.columns == ["date"]
+    assert only_unknown.count() == 0
+
+    wide = client.fetch_multi(["AFD", "BOGUSM"])
+    assert wide.columns == ["date", "AFD"]
+    assert wide.count() > 0
+    assert client.cache_for("D").cached_codes() == ["AFD"]
+    assert client.cache_for("M").cached_codes() == []
+    assert not client.cache_for("M")._has_data()
 
 
 def test_document_pipeline_chain(spark, tables, tmp_path):

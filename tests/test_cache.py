@@ -153,3 +153,73 @@ def test_cached_codes_df_and_missing_codes_df(spark, tmp_path):
     import pyperustats_spark.plans as P
     # cached side grows with the cache — the anti-join stays unhinted
     assert not P.has_broadcast_hint(missing)
+
+
+def _jobs_launched(spark, fn, group):
+    """Spark jobs *fn* launches, counted under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cache_schema_sidecar_skips_inference_and_falls_back(spark, tmp_path):
+    import os
+
+    from pyspark.sql import functions as F
+
+    cache = IncrementalParquetCache(spark, str(tmp_path / "c8"),
+                                    keys=["code", "date"])
+    df = spark.createDataFrame(
+        [("AF", "2020-01", 1.0), ("NO", "2020-01", 2.0)],
+        "code string, date string, value double")
+    cache.append(df)
+    cache.append(df.withColumn("value", F.col("value") * 10))
+    with open(cache._manifest_path()) as f:
+        assert f.read() == "1"  # the manifest stays a bare integer
+    want = _rows(cache.load())
+
+    # the sidecar names the schema: building the view runs no job
+    assert _jobs_launched(spark, cache.load, "c8-sidecar") == 0
+    assert cache.load().schema == spark.read.parquet(cache.path) \
+        .drop("_batch_id").schema
+
+    # a cache without it (written before the sidecar existed) infers
+    os.remove(cache._schema_path())
+    assert _jobs_launched(spark, cache.load, "c8-inferred") > 0
+    assert _rows(cache.load()) == want
+    # ... and its next append writes the sidecar again
+    cache.append(df)
+    assert os.path.exists(cache._schema_path())
+    with open(cache._manifest_path()) as f:
+        assert f.read() == "2"
+    assert _rows(cache.load()) == _rows(df)
+
+    # compaction lands a sidecar with its new generation
+    cache.compact()
+    assert _jobs_launched(spark, cache.load, "c8-compacted") == 0
+    assert _rows(cache.load()) == _rows(df)
+
+    # an increment with a different schema retires the sidecar
+    cache.append(df.withColumn("note", F.lit("x")))
+    assert not os.path.exists(cache._schema_path())
+    assert cache.cached_codes() == ["AF", "NO"]
+    # ... and none comes back while the files' schemas still differ
+    cache.append(df)
+    assert not os.path.exists(cache._schema_path())
+
+
+def test_cache_corrupt_namespace_raises_instead_of_reading_empty(
+        spark, tmp_path):
+    import pytest
+
+    cache = IncrementalParquetCache(spark, str(tmp_path / "c9"),
+                                    keys=["code", "date"])
+    assert cache.cached_codes() == []  # no data file: empty, no error
+    with open(f"{cache.path}/part-00000-garbage.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        cache.cached_codes()
